@@ -65,8 +65,8 @@ def label_propagation(
     """Returns (internal_id long, label long, ran_iterations metadata on df).
 
     ``csr``: a :func:`build_lp_csr` result routes the computation through
-    the fused blob-state kernel (plans/fused.py) — the 100-TB path: one
-    applyInPandas round-trip per superstep, (dst, label, weight) vote
+    the fused blob-state kernel (plans/fused.py) — the 100-TB path: the
+    superstep loop runs inside one barrier stage, (dst, label, weight) vote
     triples combined map-side per (dst, label) and argmax-reduced on the
     receive side (``labelvote`` reducer). Same synchronous schedule and
     GDS tie semantics as the classic plan — results are identical.

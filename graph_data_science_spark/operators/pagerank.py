@@ -325,7 +325,7 @@ def _pagerank_fused(
     chunk_size: int = 1,
 ) -> PageRankOutcome:
     """Fused blob-state engine (plans/fused.py): identical delta-push
-    semantics, one python round-trip + blob-only shuffles per superstep.
+    semantics, the whole superstep loop inside one barrier stage.
     This is the default engine for the north-rule throughput path."""
     from ..plans.fused import run_fused, write_static_array
 

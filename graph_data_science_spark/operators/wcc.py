@@ -63,15 +63,15 @@ def wcc(
     """Returns (internal_id long, component long).
 
     ``csr``: a :func:`build_wcc_csr` result routes the computation through
-    the fused blob-state kernel (plans/fused.py) — the 100-TB path: one
-    applyInPandas round-trip per superstep, ``min``-reduced packed
+    the fused blob-state kernel (plans/fused.py) — the 100-TB path: the
+    superstep loop runs inside one barrier stage, ``min``-reduced packed
     messages, frontier = changed labels only. Unsupported with
     ``threshold``/``seed_property`` (classic kernel handles those).
 
     ``checkpoint``: a ``plans.checkpoint.CheckpointStore`` (fused path
-    only). Each chunk-end superstep persists vertex state AND in-flight
-    frontier messages plus per-bucket lineage rows; a later call with the
-    same store resumes mid-convergence byte-identically."""
+    only). Every ``chunk_size`` supersteps the loop persists vertex state
+    AND in-flight frontier messages plus per-bucket lineage rows; a later
+    call with the same store resumes mid-convergence byte-identically."""
     if csr is not None:
         if threshold is not None or seed_property is not None:
             raise ValueError(
@@ -221,11 +221,6 @@ def _wcc_fused(
             np.int32 if csr.n_vertices < 2**31 - 1 else None
         ),
         chunk_size=chunk_size,
-        # min-label supersteps past convergence are no-ops (labels are a
-        # fixpoint), so the thin-frontier tail can chain many supersteps
-        # per Spark job — amortizes the fixed stage-launch serial term
-        # that caps multi-core scaling on high-diameter graphs
-        adaptive_chunk_max=max(16, chunk_size * 4),
         spark=graph.spark,
         checkpoint=checkpoint,
     )

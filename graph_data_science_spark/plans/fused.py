@@ -1,26 +1,46 @@
-"""Fused blob-state Pregel kernel — one python round-trip per superstep.
+"""Fused blob-state Pregel kernel — a resident superstep loop inside one
+barrier stage.
 
 Motivation (measured on local[8]→local[32], 22M edges, 1.5M vertices):
 a row-wise exchange of the vertex-state DataFrame costs ~0.85 s and does
 NOT scale with cores (UnsafeRow serialization + shuffle of millions of
-tiny rows is the serial term), and the classic kernel does 2-3 of them
-per superstep. This kernel removes row-wise state entirely:
+tiny rows is the serial term). This kernel removes row-wise state
+entirely:
 
 - Vertices are range-partitioned into ``n_buckets`` contiguous id
   buckets; CSR (CSC-within-block) chunks are partitioned by the SOURCE's
-  bucket, so bucket b's task holds exactly the out-edges of its own
+  bucket, so a bucket's owner holds exactly the out-edges of its own
   vertices (``build_bucketed_csr``).
-- The vertex state of a bucket is ONE DataFrame row carrying dense numpy
-  arrays as binary blobs (vertex ids are implicit: ``base + arange``).
-- A superstep is ONE ``cogroup(msgs, state).applyInPandas``:
-  combine incoming packed messages into a dense bucket array → apply →
-  scatter from the bucket's own CSC chunks → emit the new state row plus
-  per-destination-bucket packed message rows. Everything that crosses an
-  exchange or the Arrow boundary is a handful of blob rows per bucket —
-  both shuffles per superstep ship O(n_buckets²) blobs, never O(V) rows.
-- Per-superstep metrics ride on the state row as plain numeric columns
-  and are read through an Observation on the same action — one Spark job
-  per superstep total.
+- The vertex state of a bucket is dense numpy arrays (vertex ids are
+  implicit: ``base + arange``); between Spark stages it travels as ONE
+  DataFrame row of binary blobs.
+
+The superstep loop (``run_fused``) runs many supersteps inside ONE
+``mapInPandas(..., barrier=True)`` stage of ``min(n_buckets, slots)``
+tasks; task ``p`` owns buckets ``b % n_tasks == p`` and keeps their
+state in memory across supersteps. Per superstep each task combines its
+buckets' inbound messages (in sender-bucket order, so float sums are
+deterministic), calls ``compute``, scatters along its CSR chunks, and
+writes one packed message file per (superstep, target bucket, sender)
+into an exchange directory under ``csr.block_dir`` (tmp + rename). The
+tasks then meet at a file barrier: each writes a marker carrying its
+buckets' ``(l1, active, rows)``, polls (short sleeps) until every peer's
+marker exists, and applies ``converged_fn`` to the identical global
+sums — every task stops at the same superstep, so convergence is exact.
+Spark's own ``BarrierTaskContext.barrier()``/``allGather`` are not used:
+their driver-side wait (``runBarrier`` in spark-core 4.1.2) sleeps in
+1 s steps, so every call costs ~1 s for all but the last task to arrive,
+against 2-30 ms of numpy work per superstep on a 220k-edge graph. Hub
+buckets (``shard_map``) publish their send array to the exchange instead
+of scattering serially; every task then scatters its share of the hub's
+chunks (chunk ``c`` by task ``c % n_tasks``) before a second file
+barrier.
+
+Requirements: a barrier stage needs all its tasks running at once, so
+``n_tasks`` ≤ the cluster's free task slots and dynamic allocation must
+be off. ``block_dir`` must be storage every executor (and the driver,
+which reads the markers and deletes the exchange) can see — the same
+shared mount the CSR blocks already require.
 
 Static per-vertex inputs (e.g. out-degree for PageRank's push) are
 written once as dense per-bucket arrays next to the CSR blocks and read
@@ -30,10 +50,12 @@ Cluster story: every block and static array is written through the
 DataFrame writer (task-commit protocol handles retries/speculation) to
 ``resolve_block_root``-resolved storage — tmpfs on a local master, a
 REQUIRED shared filesystem (``SPARK_GRAFT_BLOCK_DIR``) on a
-multi-executor master, enforced with a loud error. Executors only ever
-READ the block files (mmap + per-worker LRU), so any POSIX mount every
-executor can see (NFS / fuse-DFS / cluster scratch) works; the OS page
-cache gives one resident copy per host.
+multi-executor master, enforced with a loud error. Executors READ the
+block files (mmap + per-worker LRU), so any POSIX mount every executor
+can see (NFS / fuse-DFS / cluster scratch) works; the OS page cache
+gives one resident copy per host. The exchange files are the only
+worker-side writes; on NFS mount with ``lookupcache=positive`` (or
+none) so a peer's new marker is not hidden by a cached negative lookup.
 
 Skew note: range partitioning gives up the salted-hash hub splitting of
 ``build_csr_graph``; choose ``n_buckets`` ≥ 4× cores so heavy buckets
@@ -49,30 +71,39 @@ reducer, vote-to-halt via the frontier mask, per-superstep metrics
 from __future__ import annotations
 
 import glob
+import logging
 import os
+import shutil
 import time
+import uuid
 from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, functions as F
 
-from .checkpoint import CheckpointStore, Timer, loop_checkpoint
+from .checkpoint import CheckpointStore, Timer
 from .csr import _build_chunks
 
-# kind 0 = state row (pay1..payK = algorithm state arrays, metrics cols;
-#   task_sec = the bucket task's own wall time, read into lineage),
-# kind 1 = packed messages (pay1 = int32 bucket-local dst ids, pay2 =
-#   float64 values; the "labelvote" reducer additionally ships pay3 =
-#   float64 vote weights so a message is a (dst, label, weight) triple),
-# kind 2 = hub shard job (pay1 = dense send array; active = shard id),
-# kind 3 = shard-lineage row (task_sec only — consumed by the checkpoint
-#   lineage read, ignored by the gather)
+# Segment input/output rows between Spark stages (and checkpoint files):
+# kind 0 = state row (pay1, pay2 = algorithm state arrays; l1/active/
+#   nrows = the bucket's last-superstep metrics; task_sec = that
+#   superstep's compute + scatter seconds for the bucket),
+# kind 1 = packed messages still to be combined (bucket = target; pay1 =
+#   int32 bucket-local dst ids, pay2 = values; the "labelvote" reducer
+#   additionally ships pay3 = float64 vote weights so a message is a
+#   (dst, label, weight) triple; active = sender bucket)
 FUSED_SCHEMA = (
     "kind int, bucket int, pay1 binary, pay2 binary, pay3 binary, "
     "l1 double, active long, nrows long, task_sec double"
+)
+_OUT_COLS = (
+    "kind", "bucket", "pay1", "pay2", "pay3", "l1", "active", "nrows",
+    "task_sec",
 )
 
 
@@ -85,8 +116,9 @@ class BucketedCsr:
     # builds since the degree fold-in carry per-bucket out_degree /
     # out_wdegree statics written during the CSR pass itself
     has_degree_statics: bool = False
-    # hub buckets (edge mass ≫ average): bucket -> n_shards; their
-    # scatter runs as parallel shard tasks (chunk_no % n_shards == shard)
+    # hub buckets (edge mass ≫ average): bucket -> n_shards; the loop
+    # spreads their chunks over all of its tasks instead of scattering
+    # them in the owner alone
     shard_map: dict | None = None
 
     def cleanup(self) -> None:
@@ -111,7 +143,7 @@ def build_bucketed_csr(
     (env ``GDS_HUB_SHARD_EDGES``, default 1M) and 2× the mean bucket
     mass packs ~``hub_shard_edges``-sized chunks and is recorded in
     ``shard_map`` (bucket → n_shards); the superstep loop then scatters
-    it as parallel shard tasks instead of one serial task. Chunks hold
+    its chunks from every task instead of one serial owner. Chunks hold
     disjoint dst runs, so shard-partial messages are exact under every
     (associative) reducer."""
     spark = edges.sparkSession
@@ -161,8 +193,8 @@ def build_bucketed_csr(
         n_e = len(pdf)
         tgt = max_chunk_edges
         if n_e > 2 * shard_edges:
-            # heavy bucket: equalized ~shard_edges chunks so the shard
-            # stage gets balanced parallel scatter units
+            # heavy bucket: equalized ~shard_edges chunks so the loop's
+            # tasks get balanced parallel scatter units
             parts = -(-n_e // shard_edges)
             tgt = min(max_chunk_edges, -(-n_e // parts))
         out = _build_chunks(key, pdf, tgt)
@@ -303,8 +335,8 @@ def _cache_put(key, val):
 def load_bucket_chunks(block_dir: str, bucket: int) -> list[tuple]:
     """Decoded CSR chunks for one bucket: list of (chunk_no, arrays)
     where arrays = (src_ids, dst_ids, dst_offsets, src_idx, weights).
-    The chunk number keys hub-shard scatter (shard s owns chunks with
-    ``chunk_no % n_shards == s``)."""
+    The chunk number keys hub scatter (loop task p scatters a hub's
+    chunks with ``chunk_no % n_tasks == p``)."""
     key = ("csr", block_dir, bucket)
     hit = _cache_get(key)
     if hit is not None:
@@ -436,8 +468,9 @@ def _emit_scatter(
     side's sender-sorted combine order stays deterministic.
 
     ``msg_dtype=np.int32`` (min/max reducers, unweighted, integer-valued
-    sends < 2^31 only — validated by run_fused): per-edge gathers, the
-    message sort and the shuffled pay2 payload all carry int32 instead
+    sends in (-2^31, 2^31-1) only; run_fused checks the reducer/weights
+    contract, the CALLER owns the value range): per-edge gathers, the
+    message sort and the exchanged pay2 payload all carry int32 instead
     of float64 — 8 B/message instead of 12 and roughly half the
     memory-bandwidth per superstep, which is what the full-frontier
     supersteps are bound by at high core counts (BENCH.md). Exact: the
@@ -693,6 +726,456 @@ class FusedResult:
         )
 
 
+_log = logging.getLogger(__name__)
+# a peer that has not reached a file barrier after this long is reported
+# lost (Spark normally kills the whole barrier stage long before)
+_SYNC_TIMEOUT_S = 1800.0
+# driver-side runs of one segment: a failed barrier attempt is rerun once
+# in a fresh exchange directory (Spark's own stage retry fails fast, see
+# _Exchange)
+_SEGMENT_ATTEMPTS = 2
+# barrier marker row: bucket, l1, active, nrows, task seconds, hub sent
+_MARK_COLS = 6
+
+
+def _new_rows() -> dict:
+    return {c: [] for c in _OUT_COLS}
+
+
+def _write_file(path: str, parts) -> None:
+    """Write ``parts`` (bytes-likes) to ``path`` so that readers never
+    see a partial file: hidden tmp name, then rename."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.tmp")
+    with open(tmp, "wb") as fh:
+        for part in parts:
+            fh.write(part)
+    os.rename(tmp, path)
+
+
+def _read_file(path: str, remove: bool = False) -> bytes:
+    with open(path, "rb") as fh:
+        buf = fh.read()
+    if remove:
+        os.remove(path)
+    return buf
+
+
+class _Exchange:
+    """Task side of one segment's exchange directory.
+
+    Layout: ``b<target>/<superstep>_<sender>_<part>`` packed message
+    files (read, then deleted, by the target's owner), ``state/<bucket>``
+    resumed state, ``send/<superstep>_<bucket>`` hub send arrays and
+    ``sync/<tag>_<task>`` barrier markers. The driver creates the
+    directories before the stage and deletes the tree after it; tasks
+    only create files, so a killed attempt cannot resurrect a deleted
+    exchange.
+
+    Retry safety: Spark reruns a failed barrier stage with the same
+    closure, hence the same directory. Each task first claims
+    ``sync/start_<task>`` with O_EXCL; finding it taken means this is a
+    retry of a failed attempt whose files may be half-written, so the
+    task fails at once and the driver reruns the segment in a fresh
+    directory."""
+
+    def __init__(self, root: str, task: int, n_tasks: int):
+        self.root = root
+        self.task = task
+        self.n_tasks = n_tasks
+        self.sync_dir = os.path.join(root, "sync")
+        try:
+            fd = os.open(
+                os.path.join(self.sync_dir, f"start_{task}"),
+                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            )
+        except FileExistsError:
+            raise RuntimeError(
+                f"barrier task {task}: exchange {root} was used by a "
+                "failed attempt; refusing to read its files"
+            ) from None
+        os.close(fd)
+
+    def path(self, *parts) -> str:
+        return os.path.join(self.root, *parts)
+
+    def put_msgs(self, it: int, rows: dict, part: int) -> None:
+        """Write kind-1 ``rows`` (as ``_emit_scatter`` appends them) as
+        one file per (target, sender), rows concatenated in emit order.
+        Layout: int64 message count, then pay2, pay3, pay1 — the 8-byte
+        lanes first, so every array stays aligned."""
+        groups: dict = {}
+        for i, key in enumerate(zip(rows["bucket"], rows["active"])):
+            groups.setdefault(key, []).append(i)
+        for (target, sender), idx in groups.items():
+            n = sum(int(rows["nrows"][i]) for i in idx)
+            _write_file(
+                self.path(f"b{target}", f"{it}_{sender}_{part}"),
+                [np.int64(n).tobytes()]
+                + [rows["pay2"][i] for i in idx]
+                + [rows["pay3"][i] for i in idx]
+                + [rows["pay1"][i] for i in idx],
+            )
+
+    def take_msgs(
+        self, it: int, bucket: int, val_dtype, votes: bool
+    ) -> list[tuple]:
+        """Superstep ``it``'s messages to ``bucket`` as (ids, values,
+        weights) in (sender, part) order — the deterministic combine
+        order. Files are deleted once read (each has one reader)."""
+        d = self.path(f"b{bucket}")
+        found = []
+        for name in os.listdir(d):
+            if name.startswith("."):
+                continue
+            step, sender, part = map(int, name.split("_"))
+            if step == it:
+                found.append((sender, part, name))
+        vsize = np.dtype(val_dtype).itemsize
+        out = []
+        for _s, _p, name in sorted(found):
+            buf = _read_file(os.path.join(d, name), remove=True)
+            n = int(np.frombuffer(buf, np.int64, 1)[0])
+            vals = np.frombuffer(buf, val_dtype, n, 8)
+            off = 8 + n * vsize
+            weights = None
+            if votes:
+                weights = np.frombuffer(buf, np.float64, n, off)
+                off += 8 * n
+            out.append((np.frombuffer(buf, np.int32, n, off), vals, weights))
+        return out
+
+    def sync(self, tag: str, payload: bytes = b"") -> list[bytes]:
+        """File barrier: publish ``payload`` as this task's marker for
+        ``tag``, wait (short sleeps) for every peer's, and return all
+        payloads in task order."""
+        marker = [
+            os.path.join(self.sync_dir, f"{tag}_{q}")
+            for q in range(self.n_tasks)
+        ]
+        _write_file(marker[self.task], [payload])
+        waiting = list(range(self.n_tasks))
+        deadline = time.monotonic() + _SYNC_TIMEOUT_S
+        delay = 5e-5
+        while True:
+            waiting = [q for q in waiting if not os.path.exists(marker[q])]
+            if not waiting:
+                break
+            if not os.path.isdir(self.sync_dir):
+                raise RuntimeError(
+                    f"exchange {self.root} was removed: attempt abandoned"
+                )
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"barrier sync {tag!r}: task {waiting[0]} of "
+                    f"{self.n_tasks} did not arrive within "
+                    f"{_SYNC_TIMEOUT_S:.0f} s (exchange {self.root})"
+                )
+            time.sleep(delay)
+            delay = min(2 * delay, 2e-3)
+        return [_read_file(m) for m in marker]
+
+
+def _mark_table(payloads: list[bytes]) -> np.ndarray:
+    """Concatenated barrier markers, one row per bucket, bucket-sorted."""
+    t = np.concatenate(
+        [np.frombuffer(b, np.float64).reshape(-1, _MARK_COLS) for b in payloads]
+    )
+    return t[np.argsort(t[:, 0], kind="stable")]
+
+
+def _step_metrics(it: int, table: np.ndarray) -> dict:
+    """Global superstep metrics from the bucket-sorted marker table. The
+    tasks and the driver sum identical bytes in identical order, so they
+    agree on the convergence test bit-for-bit."""
+    return {
+        "iteration": it,
+        "rows": int(table[:, 3].sum()),
+        "l1": float(table[:, 1].sum()),
+        "active": int(table[:, 2].sum()),
+    }
+
+
+def _halts(metrics: dict, converged_fn) -> bool:
+    return metrics["active"] == 0 or (
+        converged_fn is not None and bool(converged_fn(metrics))
+    )
+
+
+def _combine(
+    parts: list[tuple], width: int, reducer: str, msg_dtype
+) -> tuple[np.ndarray, np.ndarray]:
+    """Reduce one bucket's inbound (ids, values, weights) message parts,
+    given in sender order, to dense ``(msg_vals, msg_mask)``."""
+    val_np = np.int32 if msg_dtype is not None else np.float64
+    if parts:
+        allv = np.concatenate([q[0] for q in parts])
+        allm = np.concatenate([q[1] for q in parts])
+    else:
+        allv = np.empty(0, np.int32)
+        allm = np.empty(0, val_np)
+    if reducer == "labelvote":
+        allw = (
+            np.concatenate([q[2] for q in parts])
+            if parts
+            else np.empty(0, np.float64)
+        )
+        return _combine_labelvote(allv, allm, allw, width)
+    # bincount is the vectorized combine (np.add.at is a scalar loop
+    # ~100 ns/element — it alone dominated python CPU at 145M-edge scale)
+    cnt = np.bincount(allv, minlength=width).astype(np.float64)
+    if reducer == "sum":
+        acc = np.bincount(allv, weights=allm, minlength=width)
+    elif reducer == "count":
+        acc = cnt.copy()
+    else:
+        # min/max: sort by target, segment-reduce (the sort and gather
+        # run in int32 lanes when msg_dtype is set — the combine result
+        # is then widened once, O(width) not O(messages))
+        if reducer == "min":
+            fill = 2**31 - 1 if msg_dtype is not None else np.inf
+            red = np.minimum
+        else:
+            fill = -(2**31) if msg_dtype is not None else -np.inf
+            red = np.maximum
+        acc = np.full(width, fill, dtype=allm.dtype)
+        if len(allv):
+            order = np.argsort(allv, kind="stable")
+            sv = allv[order]
+            sm = allm[order]
+            starts = np.nonzero(np.r_[True, sv[1:] != sv[:-1]])[0]
+            acc[sv[starts]] = red.reduceat(sm, starts)
+        if msg_dtype is not None:
+            acc = acc.astype(np.float64)
+    return acc, cnt > 0
+
+
+def _segment_task(
+    *,
+    xdir: str,
+    t0: int,
+    seg_end: int,
+    n_tasks: int,
+    csr: BucketedCsr,
+    hubs: frozenset,
+    compute: Callable,
+    reducer: str,
+    converged_fn,
+    use_weights: bool,
+    msg_dtype,
+    keep_messages: bool,
+):
+    """The barrier task: supersteps ``t0..seg_end`` (or to convergence)
+    for the buckets ``b % n_tasks == task``. Yields their kind-0 state
+    rows, plus the last superstep's kind-1 message rows when
+    ``keep_messages`` (a checkpointed segment)."""
+    nb, bw, n_vertices = csr.n_buckets, csr.bucket_width, csr.n_vertices
+    block_dir = csr.block_dir
+    bucket_edges = np.arange(1, nb + 1, dtype=np.int64) * bw
+    val_dtype = np.int32 if msg_dtype is not None else np.float64
+    votes = reducer == "labelvote"
+
+    def scatter(rows, send, chunks, bucket):
+        _emit_scatter(
+            rows, send, chunks, bucket * bw, bucket, bw, nb, bucket_edges,
+            reducer, use_weights, msg_dtype,
+        )
+
+    def run(batches):
+        from pyspark import TaskContext
+
+        p = TaskContext.get().partitionId()
+        x = _Exchange(xdir, p, n_tasks)
+        owned = list(range(p, nb, n_tasks))
+        widths = {b: min(bw, n_vertices - b * bw) for b in owned}
+        state: dict = {}
+        if t0 > 1:
+            # resumed segment: the input rows sit in arbitrary
+            # partitions — route them to their owners via the exchange
+            for pdf in batches:
+                kinds = pdf["kind"].to_numpy()
+                for r in pdf[kinds == 0].itertuples(index=False):
+                    _write_file(
+                        x.path("state", str(r.bucket)),
+                        [np.int64(len(r.pay1)).tobytes(), r.pay1, r.pay2],
+                    )
+                msgs = pdf[kinds == 1]
+                if len(msgs):
+                    x.put_msgs(
+                        t0 - 1, {c: msgs[c].tolist() for c in _OUT_COLS}, p
+                    )
+            x.sync("in")
+            for b in owned:
+                try:
+                    buf = _read_file(x.path("state", str(b)), remove=True)
+                except FileNotFoundError:
+                    raise RuntimeError(
+                        f"segment input has no state row for bucket {b}"
+                    ) from None
+                n1 = int(np.frombuffer(buf, np.int64, 1)[0])
+                state[b] = (
+                    np.frombuffer(buf, np.float64, n1 // 8, 8).copy(),
+                    np.frombuffer(buf, np.float64, offset=8 + n1).copy(),
+                )
+        else:
+            for _ in batches:
+                pass
+
+        it = t0
+        while True:
+            last = it == seg_end
+            # the run's final superstep (no store) scatters nothing
+            emit = keep_messages or not last
+            marks = []
+            step_rows = []
+            for b in owned:
+                t_b = time.monotonic()
+                width = widths[b]
+                if it == 1:
+                    st = msg_vals = msg_mask = None
+                else:
+                    st = state[b]
+                    msg_vals, msg_mask = _combine(
+                        x.take_msgs(it - 1, b, val_dtype, votes),
+                        width, reducer, msg_dtype,
+                    )
+
+                def static(name, default=0.0, _b=b, _w=width):
+                    return load_static(block_dir, name, _b, bw, default)[:_w]
+
+                new_state, send, l1, active = compute(
+                    b, it, st, msg_vals, msg_mask, static
+                )
+                state[b] = new_state
+                hub_sent = 0
+                if send is not None and emit:
+                    if b in hubs:
+                        # hub: publish the send array; every task scatters
+                        # its share of the chunks after the barrier
+                        if not np.isnan(send).all():
+                            _write_file(
+                                x.path("send", f"{it}_{b}"),
+                                [np.asarray(send, np.float64).tobytes()],
+                            )
+                            hub_sent = 1
+                    else:
+                        rows = _new_rows()
+                        scatter(rows, send, load_bucket_chunks(block_dir, b), b)
+                        step_rows.append(rows)
+                        if not last:
+                            x.put_msgs(it, rows, 0)
+                marks.append(
+                    (b, l1, active, width, time.monotonic() - t_b, hub_sent)
+                )
+            table = _mark_table(
+                x.sync(f"a{it}", np.asarray(marks, np.float64).tobytes())
+            )
+            done = last or _halts(_step_metrics(it, table), converged_fn)
+            sent_hubs = [int(b) for b in table[table[:, 5] > 0, 0]]
+            if sent_hubs and (keep_messages or not done):
+                for h in sent_hubs:
+                    send = np.fromfile(x.path("send", f"{it}_{h}"), np.float64)
+                    rows = _new_rows()
+                    scatter(
+                        rows,
+                        send,
+                        [
+                            c for c in load_bucket_chunks(block_dir, h)
+                            if c[0] % n_tasks == p
+                        ],
+                        h,
+                    )
+                    step_rows.append(rows)
+                    if not done:
+                        x.put_msgs(it, rows, p)
+                if not done:
+                    x.sync(f"b{it}")
+                    for h in sent_hubs:
+                        if h % n_tasks == p:
+                            os.remove(x.path("send", f"{it}_{h}"))
+            if done:
+                break
+            it += 1
+
+        out = _new_rows()
+        for b, l1, active, width, sec, _hub in marks:
+            s0, s1 = state[int(b)]
+            out["kind"].append(0)
+            out["bucket"].append(int(b))
+            out["pay1"].append(np.asarray(s0).tobytes())
+            out["pay2"].append(np.asarray(s1).tobytes())
+            out["pay3"].append(b"")
+            out["l1"].append(float(l1))
+            out["active"].append(int(active))
+            out["nrows"].append(int(width))
+            out["task_sec"].append(float(sec))
+        if keep_messages:
+            for rows in step_rows:
+                for c in _OUT_COLS:
+                    out[c].extend(rows[c])
+        yield pd.DataFrame(out)
+
+    return run
+
+
+def _task_slots(spark) -> int:
+    """Task slots the cluster has now — what a barrier stage may use."""
+    sc = spark.sparkContext
+    try:
+        jsc = sc._jsc.sc()
+        return int(jsc.maxNumConcurrentTasks(
+            jsc.resourceProfileManager().defaultResourceProfile()
+        ))
+    except Py4JError:  # JVM surface differs: fall back to the default
+        return sc.defaultParallelism
+
+
+def _run_segment(
+    inp: DataFrame, make_task: Callable, action: Callable, csr: BucketedCsr,
+    n_tasks: int, t0: int,
+) -> tuple[DataFrame, list[tuple], float]:
+    """Run one barrier segment and materialize its output with
+    ``action``; returns (output, [(superstep, marker table)], seconds).
+    A failed attempt is rerun in a fresh exchange directory; every
+    exchange is deleted when its stage ends."""
+    attempt = 1
+    while True:
+        xdir = os.path.join(csr.block_dir, f"xchg_{uuid.uuid4().hex[:12]}")
+        for sub in ("sync", "state", "send", *(
+            f"b{b}" for b in range(csr.n_buckets)
+        )):
+            os.makedirs(os.path.join(xdir, sub))
+        try:
+            with Timer() as timer:
+                out = action(
+                    inp.mapInPandas(make_task(xdir), FUSED_SCHEMA, barrier=True)
+                )
+            steps = []
+            while True:
+                it = t0 + len(steps)
+                marks = [
+                    os.path.join(xdir, "sync", f"a{it}_{q}")
+                    for q in range(n_tasks)
+                ]
+                if not all(map(os.path.exists, marks)):
+                    break
+                steps.append((it, _mark_table([_read_file(m) for m in marks])))
+            if not steps:
+                raise RuntimeError(f"segment at superstep {t0} left no markers")
+            return out, steps, timer.elapsed
+        except (Py4JError, PySparkException):
+            # a failed Spark job (a task raised, an executor was lost)
+            if attempt == _SEGMENT_ATTEMPTS:
+                raise
+            _log.warning(
+                "fused segment at superstep %d failed; rerunning it in a "
+                "fresh exchange directory", t0, exc_info=True,
+            )
+            attempt += 1
+        finally:
+            shutil.rmtree(xdir, ignore_errors=True)
+
+
 def run_fused(
     csr: BucketedCsr,
     compute: Callable,
@@ -703,32 +1186,24 @@ def run_fused(
     checkpoint: CheckpointStore | None = None,
     use_weights: bool = False,
     chunk_size: int = 1,
-    adaptive_chunk_max: int | None = None,
-    adaptive_threshold: float = 0.05,
     msg_dtype=None,
     spark=None,
 ) -> FusedResult:
-    """Superstep loop over blob state.
+    """Superstep loop over blob state, resident in barrier stages (see
+    the module docstring for the stage, the file exchange and the file
+    barrier).
 
-    ``chunk_size`` > 1 chains that many supersteps lazily into ONE Spark
-    job (per-superstep metrics still observed individually): the
-    intermediate message blobs then exist only as shuffle files — they
-    never pass through the block manager — which at ~16 B/edge of message
-    traffic is the dominant materialization cost. Trade-off: convergence
-    is detected at chunk granularity (the returned state is the
-    chunk-end state even if an earlier superstep already met the
-    criterion), so keep the default 1 when exact ranIterations parity
-    matters and raise it for fixed-iteration throughput runs.
-
-    ``adaptive_chunk_max``: when set, the chunk size doubles (up to this
-    cap) every time the newest superstep's active fraction drops below
-    ``adaptive_threshold`` — the thin-frontier convergence tail then
-    amortizes its fixed per-job stage-launch cost over many supersteps
-    (the serial term that caps multi-core scaling efficiency; see
-    BENCH.md). Convergence detection stays exact per-superstep via the
-    per-superstep Observations — only the returned state may overshoot
-    to chunk end, so enable this only for computes whose post-convergence
-    supersteps are idempotent (min-label WCC, labelvote LP).
+    Without ``checkpoint`` the whole run is ONE barrier stage that stops
+    exactly at the first superstep where no bucket is active or
+    ``converged_fn`` holds — one Spark job in total. With a
+    ``checkpoint`` store the loop runs in segments of ``chunk_size``
+    supersteps (supersteps per checkpoint): each segment is one stage
+    whose output — kind-0 state plus the in-flight kind-1 messages — is
+    written with ``write_state``, then ``write_lineage`` records one row
+    per bucket for every superstep of the segment. A resumed run starts
+    from ``latest_complete()``. Convergence stays exact inside a
+    segment; a segment that converges early is stored under the
+    superstep it stopped at.
 
     ``compute(bucket, iteration, state, msg_vals, msg_mask, static) ->
     (new_state: tuple[np.ndarray, np.ndarray], send: np.ndarray | None,
@@ -742,6 +1217,10 @@ def run_fused(
       send), or None to send nothing.
     - ``static``: accessor ``static(name, default)`` for dense per-bucket
       arrays written by :func:`write_static_array`.
+
+    ``converged_fn`` sees ``iteration``, ``rows``, ``l1`` and ``active``
+    summed over all buckets; the returned ``metrics`` add ``wall_time``
+    (the segment's wall time per superstep).
     """
     if spark is None:
         raise ValueError("spark session required")
@@ -758,246 +1237,11 @@ def run_fused(
             )
         if np.dtype(msg_dtype) != np.int32:
             raise ValueError("only int32 msg_dtype is supported")
-    nb, bw = csr.n_buckets, csr.bucket_width
-    n_vertices = csr.n_vertices
-    block_dir = csr.block_dir
-    bucket_edges = np.arange(1, nb + 1, dtype=np.int64) * bw
-    shard_map = csr.shard_map or {}
+    nb = csr.n_buckets
+    # a barrier stage needs every task running at once
+    n_tasks = max(1, min(nb, _task_slots(spark)))
+    hubs = frozenset(csr.shard_map or ())
 
-    out_cols = (
-        "kind", "bucket", "pay1", "pay2", "pay3", "l1", "active", "nrows",
-        "task_sec",
-    )
-
-    def shard_udf(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        """Hub-shard scatter stage. Groups keyed (bucket, g2): g2 == -1
-        is the pass-through group (state + regular message rows flow on
-        unchanged); g2 >= 0 scatters shard g2's chunk subset of a hub
-        bucket — so a hub's edge mass runs as n_shards parallel tasks
-        instead of one serial one. Exact: chunks hold disjoint dst runs
-        (partial sums per shard never overlap a dst)."""
-        g2 = int(key[1])
-        if g2 < 0:
-            return pdf[list(out_cols)]
-        t_task = time.monotonic()
-        bucket = int(key[0])
-        base = bucket * bw
-        n_shards = shard_map.get(bucket, 1)
-        rows = {c: [] for c in out_cols}
-        send = np.frombuffer(pdf.iloc[0]["pay1"], dtype=np.float64)
-        chunks = [
-            (cno, arrs)
-            for cno, arrs in load_bucket_chunks(block_dir, bucket)
-            if cno % n_shards == g2
-        ]
-        _emit_scatter(
-            rows, send, chunks, base, bucket, bw, nb, bucket_edges,
-            reducer, use_weights, msg_dtype,
-        )
-        # kind-3 lineage-only row: this shard task's wall time (ignored
-        # by the gather; read by the checkpoint lineage pass, then dies)
-        rows["kind"].append(3)
-        rows["bucket"].append(bucket)
-        rows["pay1"].append(b"")
-        rows["pay2"].append(b"")
-        rows["pay3"].append(b"")
-        rows["l1"].append(0.0)
-        rows["active"].append(g2)
-        rows["nrows"].append(0)
-        rows["task_sec"].append(time.monotonic() - t_task)
-        return pd.DataFrame(rows)
-
-    def make_udf(iteration: int):
-        # single-input grouped UDF (state + message rows share the schema,
-        # keyed by target bucket): ONE exchange per superstep, rows split
-        # by `kind` python-side. Message ids ship as BUCKET-LOCAL int32
-        # (25% fewer message bytes than global int64).
-        def udf(key, pdf: pd.DataFrame):
-            if os.environ.get("GDS_FUSED_PROFILE"):
-                import cProfile
-                import pstats
-
-                prof = cProfile.Profile()
-                prof.enable()
-                try:
-                    return _udf_body(key, pdf)
-                finally:
-                    prof.disable()
-                    with open(
-                        f"/tmp/gds_prof_{os.getpid()}.txt", "a"
-                    ) as fh:
-                        st = pstats.Stats(prof, stream=fh)
-                        st.sort_stats("cumulative").print_stats(12)
-            return _udf_body(key, pdf)
-
-        def _udf_body(key, pdf: pd.DataFrame):
-            t_task = time.monotonic()
-            bucket = int(key[0])
-            base = bucket * bw
-            width = min(bw, n_vertices - base)
-            if width <= 0:
-                return pd.DataFrame({c: [] for c in out_cols})
-
-            def static(name, default=0.0):
-                return load_static(block_dir, name, bucket, bw, default)[
-                    :width
-                ]
-
-            if iteration == 1:
-                state = None
-                msg_vals = None
-                msg_mask = None
-            else:
-                kinds = pdf["kind"].to_numpy()
-                sidx = np.nonzero(kinds == 0)[0]
-                if len(sidx) == 0:
-                    return pd.DataFrame({c: [] for c in out_cols})
-                srow = pdf.iloc[int(sidx[0])]
-                state = (
-                    np.frombuffer(srow["pay1"], dtype=np.float64).copy(),
-                    np.frombuffer(srow["pay2"], dtype=np.float64).copy(),
-                )
-                p1 = pdf["pay1"].to_numpy()
-                p2 = pdf["pay2"].to_numpy()
-                midx = np.nonzero(kinds == 1)[0]
-                # deterministic combine order: message rows arrive in
-                # shuffle order (run-dependent); float summation is not
-                # associative, so sort by sender bucket (carried in the
-                # `active` column of kind-1 rows) for byte-identical
-                # results across runs and checkpoint resumes
-                if len(midx) > 1:
-                    senders = pdf["active"].to_numpy()[midx]
-                    midx = midx[np.argsort(senders, kind="stable")]
-                val_np = np.int32 if msg_dtype is not None else np.float64
-                vs = [np.frombuffer(p1[i], dtype=np.int32) for i in midx]
-                ms = [np.frombuffer(p2[i], dtype=val_np) for i in midx]
-                if vs:
-                    allv = np.concatenate(vs) if len(vs) > 1 else vs[0]
-                    allm = np.concatenate(ms) if len(ms) > 1 else ms[0]
-                else:
-                    allv = np.empty(0, np.int32)
-                    allm = np.empty(0, val_np)
-                if reducer == "labelvote":
-                    p3 = pdf["pay3"].to_numpy()
-                    ws_ = [
-                        np.frombuffer(p3[i], dtype=np.float64) for i in midx
-                    ]
-                    allw = (
-                        np.concatenate(ws_)
-                        if len(ws_) > 1
-                        else (ws_[0] if ws_ else np.empty(0, np.float64))
-                    )
-                    msg_vals, msg_mask = _combine_labelvote(
-                        allv, allm, allw, width
-                    )
-                else:
-                    # bincount is the vectorized combine (np.add.at is a
-                    # scalar loop ~100 ns/element — it alone dominated
-                    # python CPU at 145M-edge scale)
-                    cnt = np.bincount(allv, minlength=width).astype(
-                        np.float64
-                    )
-                    if reducer == "sum":
-                        acc = np.bincount(
-                            allv, weights=allm, minlength=width
-                        )
-                    elif reducer == "count":
-                        acc = cnt.copy()
-                    else:
-                        # min/max: sort by target, segment-reduce (the
-                        # sort and gather run in int32 lanes when
-                        # msg_dtype is set — the combine result is then
-                        # widened once, O(width) not O(messages))
-                        if reducer == "min":
-                            acc = np.full(
-                                width,
-                                2**31 - 1 if msg_dtype is not None
-                                else np.inf,
-                                dtype=allm.dtype,
-                            )
-                            red = np.minimum
-                        else:
-                            acc = np.full(
-                                width,
-                                -(2**31) if msg_dtype is not None
-                                else -np.inf,
-                                dtype=allm.dtype,
-                            )
-                            red = np.maximum
-                        if len(allv):
-                            order = np.argsort(allv, kind="stable")
-                            sv = allv[order]
-                            sm = allm[order]
-                            starts = np.nonzero(
-                                np.r_[True, sv[1:] != sv[:-1]]
-                            )[0]
-                            acc[sv[starts]] = red.reduceat(sm, starts)
-                        if msg_dtype is not None:
-                            acc = acc.astype(np.float64)
-                    msg_mask = cnt > 0
-                    msg_vals = acc
-
-            new_state, send, l1, active = compute(
-                bucket, iteration, state, msg_vals, msg_mask, static
-            )
-            rows = {c: [] for c in out_cols}
-            rows["kind"].append(0)
-            rows["bucket"].append(bucket)
-            rows["pay1"].append(new_state[0].tobytes())
-            rows["pay2"].append(new_state[1].tobytes())
-            rows["pay3"].append(b"")
-            rows["l1"].append(float(l1))
-            rows["active"].append(int(active))
-            rows["nrows"].append(width)
-            rows["task_sec"].append(0.0)  # backfilled below
-
-            if send is not None:
-                n_shards = shard_map.get(bucket, 0)
-                if n_shards > 1:
-                    # hub bucket: don't scatter serially here — emit one
-                    # kind-2 shard job per shard (pay1 = the dense send
-                    # array); the shard stage scatters its chunk subset
-                    # in parallel tasks. Skip entirely when nothing sends.
-                    if not bool(np.isnan(send).all()):
-                        blob = send.tobytes()
-                        for s in range(n_shards):
-                            rows["kind"].append(2)
-                            rows["bucket"].append(bucket)
-                            rows["pay1"].append(blob)
-                            rows["pay2"].append(b"")
-                            rows["pay3"].append(b"")
-                            rows["l1"].append(0.0)
-                            rows["active"].append(s)  # shard id
-                            rows["nrows"].append(0)
-                            rows["task_sec"].append(0.0)
-                else:
-                    _emit_scatter(
-                        rows, send, load_bucket_chunks(block_dir, bucket),
-                        base, bucket, bw, nb, bucket_edges, reducer,
-                        use_weights, msg_dtype,
-                    )
-            # the first row is this bucket's state row: record the task's
-            # own wall time so lineage shows true per-partition balance
-            rows["task_sec"][0] = time.monotonic() - t_task
-            return pd.DataFrame(rows)
-
-        return udf
-
-    from pyspark.sql import Observation
-
-    jsc = spark.sparkContext._jsc
-
-    def _persistent_ids() -> set:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _unpersist(ids: set) -> None:
-        jmap = jsc.getPersistentRDDs()
-        for rid in ids:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-
-    ckpt_history: list[set] = []
     start_iter = 1
     cur = None
     if checkpoint is not None:
@@ -1005,153 +1249,76 @@ def run_fused(
         if resumed is not None:
             it0, cur = resumed
             start_iter = it0 + 1
-    if cur is None:
-        cur = spark.range(nb).select(
-            F.lit(0).alias("kind"),
-            F.col("id").cast("int").alias("bucket"),
-            F.lit(b"").alias("pay1"),
-            F.lit(b"").alias("pay2"),
-            F.lit(b"").alias("pay3"),
-            F.lit(0.0).alias("l1"),
-            F.lit(0).cast("long").alias("active"),
-            F.lit(0).cast("long").alias("nrows"),
-            F.lit(0.0).alias("task_sec"),
-        )
 
     all_metrics: list[dict] = []
     converged = False
     ran = max_iterations
+    # AQE would split a resumed segment's repartition + barrier stage
+    # into two jobs
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # With AQE off, every cogroup/groupby stage in the loop launches
-    # spark.sql.shuffle.partitions tasks — for small bucket counts most
-    # are empty yet still pay scheduling + python-worker round-trips
-    # (measured ~1.4 s/superstep of pure overhead on a 1-bucket graph at
-    # 64 partitions). The blob exchange needs at most one partition per
-    # bucket, so size the loop's shuffles to the bucket count.
-    parts_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    loop_parts = nb + sum(shard_map.values())  # buckets + hub shard tasks
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(int(parts_before), loop_parts)),
-    )
-
-    def _obs_metrics(obs_name: str):
-        return (
-            F.sum(
-                F.when(F.col("kind") == 0, F.col("l1")).otherwise(0.0)
-            ).alias("l1"),
-            F.sum(
-                F.when(F.col("kind") == 0, F.col("active")).otherwise(0)
-            ).alias("active"),
-            F.sum(
-                F.when(F.col("kind") == 0, F.col("nrows")).otherwise(0)
-            ).alias("rows"),
-        )
-
     try:
         t = start_iter
-        chunk_no = 0
-        cur_chunk = chunk_size
         while t <= max_iterations and not converged:
-            chunk_no += 1
-            todo = min(cur_chunk, max_iterations - t + 1)
-            # chain `todo` supersteps lazily: intermediate message blobs
-            # live only in shuffle files, never in the block manager; each
-            # superstep still gets its own Observation.
-            observations: list[tuple[int, object]] = []
-            with Timer() as timer:
-                for i in range(todo):
-                    it = t + i
-                    out = cur.groupby("bucket").applyInPandas(
-                        make_udf(it), FUSED_SCHEMA
-                    )
-                    if shard_map:
-                        # second grouped stage: hub shard jobs (kind 2)
-                        # fan out to (bucket, shard) tasks; everything
-                        # else passes through the same exchange
-                        out = out.groupby(
-                            F.col("bucket"),
-                            F.when(F.col("kind") == 2, F.col("active"))
-                            .otherwise(F.lit(-1))
-                            .cast("int")
-                            .alias("g2"),
-                        ).applyInPandas(shard_udf, FUSED_SCHEMA)
-                    obs = Observation(f"fused_{it}_{chunk_no}")
-                    out = out.observe(obs, *_obs_metrics(f"fused_{it}"))
-                    observations.append((it, obs))
-                    cur = out
-                per_bucket = None
-                if checkpoint is not None:
-                    cur = checkpoint.write_state(cur, t + todo - 1)
-                    # per-partition lineage (north rule): the kind-0 state
-                    # rows carry per-bucket rows/l1 — read them back from
-                    # the just-written checkpoint (column-pruned scan of
-                    # n_buckets tiny rows, negligible)
-                    per_bucket = [
-                        (
-                            r["bucket"],
-                            r["nrows"],
-                            float(r["l1"] or 0.0),
-                            float(r["task_sec"] or 0.0),
-                        )
-                        for r in cur.filter(F.col("kind").isin(0, 3))
-                        .select("bucket", "nrows", "l1", "task_sec")
-                        .collect()
-                    ]
-                else:
-                    before = _persistent_ids()
-                    cur = loop_checkpoint(cur, chunk_no)
-                    ckpt_history.append(_persistent_ids() - before)
-                    if len(ckpt_history) > 2:
-                        _unpersist(ckpt_history.pop(0))
-            per_ss = timer.elapsed / todo
-            for it, obs in observations:
-                got = obs.get
-                metrics = {
-                    "iteration": it,
-                    "rows": int(got["rows"] or 0),
-                    "l1": float(got["l1"] or 0.0),
-                    "active": int(got["active"] or 0),
-                    "wall_time": per_ss,
-                }
+            seg_end = (
+                max_iterations if checkpoint is None
+                else min(t + max(chunk_size, 1) - 1, max_iterations)
+            )
+
+            def action(df, seg_end=seg_end):
+                if checkpoint is None:
+                    return df.localCheckpoint(eager=True)
+                return checkpoint.write_state(df, seg_end)
+
+            if cur is None:
+                inp = spark.range(0, n_tasks, 1, n_tasks)
+            else:
+                inp = cur
+                if inp.rdd.getNumPartitions() != n_tasks:
+                    inp = inp.repartition(n_tasks)
+
+            def make_task(xdir, t=t, seg_end=seg_end):
+                return _segment_task(
+                    xdir=xdir, t0=t, seg_end=seg_end, n_tasks=n_tasks,
+                    csr=csr, hubs=hubs, compute=compute, reducer=reducer,
+                    converged_fn=converged_fn, use_weights=use_weights,
+                    msg_dtype=msg_dtype, keep_messages=checkpoint is not None,
+                )
+
+            cur, steps, secs = _run_segment(
+                inp, make_task, action, csr, n_tasks, t
+            )
+            last = steps[-1][0]
+            if checkpoint is not None and last < seg_end:
+                cur = checkpoint.relabel_state(seg_end, last)
+            per_ss = secs / len(steps)
+            for it, table in steps:
+                metrics = _step_metrics(it, table)
+                halted = _halts(metrics, converged_fn)
+                metrics["wall_time"] = per_ss
                 all_metrics.append(metrics)
                 if checkpoint is not None:
-                    # chunk-end superstep: true per-bucket lineage rows;
-                    # intra-chunk supersteps exist only as shuffle files,
-                    # so their lineage is the observed aggregate
-                    lineage = (
-                        per_bucket
-                        if it == t + todo - 1 and per_bucket
-                        else [(-1, metrics["rows"], metrics["l1"])]
+                    checkpoint.write_lineage(
+                        it,
+                        [
+                            (int(r[0]), int(r[3]), float(r[1]), float(r[4]))
+                            for r in table
+                        ],
+                        per_ss,
                     )
-                    checkpoint.write_lineage(it, lineage, per_ss)
-                if metrics["active"] == 0 or (
-                    converged_fn is not None and converged_fn(metrics)
-                ):
-                    # convergence detected at chunk granularity: state is
-                    # the chunk-end state; ran reports the detecting step
+                if halted:
                     converged = True
                     ran = it
-                    break
-            t += todo
-            if (
-                adaptive_chunk_max
-                and not converged
-                and all_metrics
-                and all_metrics[-1]["rows"] > 0
-                and all_metrics[-1]["active"]
-                < adaptive_threshold * all_metrics[-1]["rows"]
-            ):
-                cur_chunk = min(cur_chunk * 2, adaptive_chunk_max)
+            t = last + 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", parts_before)
 
+    if cur is None:
+        cur = spark.createDataFrame([], FUSED_SCHEMA)
     return FusedResult(
         state=cur.filter(F.col("kind") == 0),
         ran_iterations=ran,
         converged=converged,
         metrics=all_metrics,
-        bucket_width=bw,
+        bucket_width=csr.bucket_width,
     )

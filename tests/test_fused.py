@@ -242,3 +242,119 @@ def test_int32_message_mode_bit_identical_to_float(spark):
         return out
 
     assert run(False) == run(True)
+
+
+def _count_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "fused job-count guard")
+    try:
+        out = fn()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    return out, n_jobs
+
+
+def test_fused_loop_runs_in_one_stage(spark, tmp_path):
+    """The superstep loop runs inside barrier stages: without a store the
+    whole 30-superstep run is one stage (at most 3 Spark jobs in all);
+    with a store there is one segment — one state write — per
+    ``chunk_size`` supersteps, and lineage still covers every
+    superstep."""
+    from graph_data_science_spark.plans.checkpoint import CheckpointStore
+
+    g, n = _graph(spark, seed=17)
+    csr = build_bucketed_csr(g.edges, n, n_buckets=6)
+    kw = dict(tolerance=0.0, max_iterations=30, csr=csr)
+    out, n_jobs = _count_jobs(
+        spark, "fused-nostore", lambda: pagerank(g, **kw)
+    )
+    assert out.ran_iterations == 30 and len(out.metrics) == 30
+    assert n_jobs <= 3, f"{n_jobs} Spark jobs for one fused run"
+
+    class CountingStore(CheckpointStore):
+        writes = 0
+
+        def write_state(self, state, iteration):
+            CountingStore.writes += 1
+            return super().write_state(state, iteration)
+
+    store = CountingStore(spark, str(tmp_path / "ck"))
+    stored, n_jobs = _count_jobs(
+        spark, "fused-store",
+        lambda: pagerank(g, checkpoint=store, chunk_size=2, **kw),
+    )
+    assert CountingStore.writes == 15
+    # per segment: the barrier stage's state write, plus the schema read
+    # when write_state re-reads the written state
+    assert n_jobs <= 2 * 15 + 3, f"{n_jobs} Spark jobs for 15 segments"
+    its = sorted(
+        r["iteration"]
+        for r in store.lineage().select("iteration").distinct().collect()
+    )
+    assert its == list(range(1, 31))
+    a = {r["internal_id"]: r["score"] for r in out.scores.collect()}
+    b = {r["internal_id"]: r["score"] for r in stored.scores.collect()}
+    assert a == b
+    csr.cleanup()
+
+
+def test_fused_task_failure_rerun_identical(spark, tmp_path):
+    """A compute that raises once (superstep 3, one bucket) fails the
+    barrier stage; the segment is rerun in a fresh exchange directory and
+    lands byte-identical to an undisturbed run."""
+    import os
+
+    from graph_data_science_spark.plans import fused as fused_mod
+
+    g, n = _graph(spark, seed=23)
+    csr = build_bucketed_csr(g.edges, n, n_buckets=4)
+    kw = dict(tolerance=0.0, max_iterations=8, csr=csr)
+    expected = {
+        r["internal_id"]: r["score"]
+        for r in pagerank(g, **kw).scores.collect()
+    }
+    flag = str(tmp_path / "failed_once")
+
+    def flaky(compute):
+        def wrapped(bucket, it, *args):
+            if it == 3 and bucket == 1 and not os.path.exists(flag):
+                open(flag, "w").close()
+                raise RuntimeError("injected fault")
+            return compute(bucket, it, *args)
+
+        return wrapped
+
+    orig = fused_mod.run_fused
+
+    def patched(csr_, compute, **kwargs):
+        return orig(csr_, flaky(compute), **kwargs)
+
+    fused_mod.run_fused = patched
+    try:
+        got = {
+            r["internal_id"]: r["score"]
+            for r in pagerank(g, **kw).scores.collect()
+        }
+    finally:
+        fused_mod.run_fused = orig
+    assert os.path.exists(flag), "the fault was never injected"
+    assert got == expected
+    assert not [
+        d for d in os.listdir(csr.block_dir) if d.startswith("xchg_")
+    ], "exchange directories left behind"
+    csr.cleanup()
+
+
+def test_exchange_refuses_a_used_directory(tmp_path):
+    """A retried barrier attempt finds its start marker taken and fails
+    instead of reading the failed attempt's files."""
+    import pytest
+
+    from graph_data_science_spark.plans.fused import _Exchange
+
+    (tmp_path / "sync").mkdir()
+    _Exchange(str(tmp_path), 0, 2)
+    _Exchange(str(tmp_path), 1, 2)
+    with pytest.raises(RuntimeError, match="failed attempt"):
+        _Exchange(str(tmp_path), 0, 2)
